@@ -513,29 +513,51 @@ def connected_components(edges: DataFrame, src: str = "src",
     representative per transitive cluster).
 
     Algorithm: hash-to-min label propagation — every node repeatedly
-    adopts the minimum label among itself and its neighbors. Each
-    iteration is one keyed shuffle (join labels to edges + min-agg);
-    rounds needed = graph diameter, and near-dup clusters are
-    band/bucket-generated so their diameter is small (single digits).
+    adopts the minimum label among itself and its neighbors; rounds
+    needed = graph diameter, and near-dup clusters are band/bucket-
+    generated so their diameter is small (single digits). ``max_iter``
+    caps the total number of propagation rounds, the seeded one
+    included.
+
+    - **One evaluation of the edges.** The symmetric edge list is one
+      ``explode`` of ``(src, dst), (dst, src)`` per pair, persisted: the
+      pair pipeline upstream (shingling, LSH join, verification) runs
+      once, not once per direction as a self-union would. It is stored
+      in at most one block per core (a narrow ``coalesce``), so every
+      round scans it with one task per core rather than one per
+      shuffle partition of the pair pipeline.
+    - **Seeded round.** Round one — min(self, neighbors) — is a single
+      ``least(a, min(b))`` aggregate over the edge list, with no
+      identity-label table to join against.
+    - **Narrow change count.** Labels only decrease, so each round
+      stores ``changed = nbr_min < component`` next to the new label;
+      convergence is a filtered count over the round's checkpointed
+      blocks, not a join of new labels to old. The seeded round always
+      changes something on a non-empty graph, so it is not counted.
 
     Each round's labels are ``localCheckpoint``-ed (eager): lineage is
-    truncated every iteration, so the *final* DataFrame's plan is a
-    single scan of the last round's blocks, not a max_iter-deep join
-    tree — without this, plan size (and Catalyst compile time) grows
-    exponentially with rounds. On a multi-node cluster prefer
-    ``spark.sparkContext.setCheckpointDir`` + ``.checkpoint()`` for
-    executor-loss resilience; localCheckpoint trades that for zero
-    extra I/O, which is the right default for a handful of rounds over
-    a (node, label) table that is tiny next to the corpus. Convergence
-    is detected with a count of changed labels (one cheap action per
-    round over label pairs only, never the original corpus).
+    truncated every iteration, so the final DataFrame's plan is a scan
+    of the last round's blocks, not a max_iter-deep join tree. The edge
+    list is ``persist``-ed rather than checkpointed: a cached relation
+    reports its materialized size, and the labels' statistics derive
+    from it, so a caller joining the labels back to its corpus still
+    plans a broadcast join. A checkpointed edge list would carry the
+    static size estimate of the pair pipeline instead, and that join
+    would plan as a sort-merge with two hash exchanges. On a multi-node
+    cluster prefer ``spark.sparkContext.setCheckpointDir`` +
+    ``.checkpoint()`` for executor-loss resilience; localCheckpoint
+    trades that for zero extra I/O over a (node, label) table that is
+    tiny next to the corpus.
     """
-    sym = (edges.selectExpr(f"{src} AS a", f"{dst} AS b").unionAll(
-        edges.selectExpr(f"{dst} AS a", f"{src} AS b")).persist())
-    labels = (sym.selectExpr("a AS node").distinct()
-              .selectExpr("node", "node AS component")
+    cores = edges.sparkSession.sparkContext.defaultParallelism
+    sym = (edges.select(F.explode(F.array(
+        F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
+        F.struct(F.col(dst).alias("a"), F.col(src).alias("b")))).alias("e"))
+        .select("e.a", "e.b").coalesce(cores).persist())
+    labels = (sym.groupBy("a").agg(F.min("b").alias("nbr_min"))
+              .selectExpr("a AS node", "least(a, nbr_min) AS component")
               .localCheckpoint(eager=True))
-    for _ in range(max_iter):
+    for _ in range(max_iter - 1):
         neighbor_min = (
             sym.join(labels, sym.b == labels.node)
             .groupBy(sym.a.alias("node"))
@@ -543,18 +565,15 @@ def connected_components(edges: DataFrame, src: str = "src",
         new_labels = (
             labels.join(neighbor_min, "node", "left")
             .selectExpr("node",
-                        "least(component, coalesce(nbr_min, component))"
-                        " AS component")
+                        "least(component, nbr_min) AS component",
+                        "nbr_min < component AS changed")
             .localCheckpoint(eager=True))
-        changed = (new_labels.alias("n")
-                   .join(labels.alias("o"), "node")
-                   .where("n.component != o.component").count())
         labels.unpersist()
         labels = new_labels
-        if changed == 0:
+        if labels.where("changed").count() == 0:
             break
     sym.unpersist()
-    return labels
+    return labels.select("node", "component")
 
 
 def dedup_decisions(df: DataFrame, comp: DataFrame, id_col: str,

@@ -64,30 +64,37 @@ def with_shingles(df: DataFrame, text_col: str, n: int = 3,
     # Shingling is CPU-heavy per row; when the source arrives in fewer
     # partitions than cores (single parquet row-group, small dimension
     # staging), fan out first — one cheap shuffle of the raw text buys
-    # full parallelism for the regex/array work. The gate reads the
-    # parquet footers' row-group count (the hard ceiling on scan
-    # parallelism) via the same cached pyarrow path as read_table's
-    # fan-out gate: ~10 ms per plan vs ~37 ms for the old
-    # df.rdd.getNumPartitions() probe (RDD conversion), both inside
-    # the timed region of every shingle consumer — and the footer
-    # reads are lru-cached per path, so repeat queries pay ~nothing.
-    # Non-file sources (in-memory test frames) keep the RDD probe.
+    # full parallelism for the regex/array work.
     sc = df.sparkSession.sparkContext
-    files = df.inputFiles()
-    if files:
-        from oracle_cassandra_migrator_spark.sources.testdata import (
-            _row_group_count)
-
-        from urllib.parse import urlparse
-
-        cap = sum(
-            _row_group_count(urlparse(f).path if f.startswith("file:") else f)
-            for f in files)
-    else:
-        cap = df.rdd.getNumPartitions()
-    if cap < sc.defaultParallelism // 2:
+    if _scan_parallelism(df) < sc.defaultParallelism // 2:
         df = df.repartition(sc.defaultParallelism)
     return df.withColumn(out, F.expr(shingles_once_expr(text_col, n)))
+
+
+def _scan_parallelism(df: DataFrame) -> int:
+    """How many tasks can scan ``df`` in parallel: for local parquet
+    files the footers' row-group count (the hard ceiling on scan
+    parallelism), read through the same lru-cached pyarrow path as
+    read_table's fan-out gate — ~10 ms per plan vs ~37 ms for the
+    ``df.rdd.getNumPartitions()`` probe (RDD conversion), both inside
+    the timed region of every shingle consumer. Every other source —
+    in-memory frames, JSON/CSV/text files, non-``file:`` URIs — takes
+    the RDD probe. ``inputFiles`` returns percent-encoded URIs (a space
+    in a directory name is ``%20``), so paths are unquoted before
+    pyarrow opens them."""
+    from urllib.parse import unquote, urlparse
+
+    from oracle_cassandra_migrator_spark.sources.testdata import (
+        _row_group_count)
+
+    files = df.inputFiles()
+    if files and all(f.startswith("file:") for f in files):
+        try:
+            return sum(_row_group_count(unquote(urlparse(f).path))
+                       for f in files)
+        except ValueError:  # pyarrow.ArrowInvalid: not a parquet file
+            pass
+    return df.rdd.getNumPartitions()
 
 
 def all_shingles_expr(words_col: str, n: int = 3) -> str:

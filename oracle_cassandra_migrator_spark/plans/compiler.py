@@ -587,8 +587,12 @@ def _op_dedup_near(ns, step):
     pipeline chains into sampling/mixing steps.
 
     Note this step is mid-plan ITERATIVE: connected components runs
-    label-propagation rounds eagerly at compile time (checkpointed
-    labels, pair-graph-sized — never corpus-sized shuffles)."""
+    its label-propagation rounds eagerly at compile time. The pair
+    pipeline is evaluated once (its symmetric edge list is persisted
+    by the seeded first round), each later round is one checkpointed
+    pair-graph-sized job plus a narrow count of changed labels, and
+    a graph of diameter d costs d + 1 rounds at most — never
+    corpus-sized shuffles."""
     from oracle_cassandra_migrator_spark.operators.dedup import (
         LSH_BANDS,
         LSH_MAX_BAND_SIZE,
