@@ -39,6 +39,7 @@ from oracle_cassandra_migrator_spark.reliability.state import (
     StateStore,
 )
 from oracle_cassandra_migrator_spark.sinks.writers import (
+    WRITE_PATH_FORMATS,
     write_file_idempotent,
     write_sink,
 )
@@ -188,25 +189,21 @@ class Pipeline:
 
     def _write_one_file(self, data_file: str, sink_spec: Mapping[str, Any]) -> None:
         df = self.spark.read.parquet(data_file)
-        fmt = sink_spec.get("format", "parquet")
-        if fmt in ("parquet", "csv", "json", "orc", "text", "avro"):
+        if sink_spec.get("format", "parquet").lower() in WRITE_PATH_FORMATS:
             # File sinks must be idempotent under crash-after-write-
             # before-marker: a plain append would duplicate the file's
             # rows on rerun. Write to a per-part temp dir (overwrite),
             # then rename outputs to deterministic names — replaying
-            # the same staged part always lands on the same targets.
-            self._write_file_idempotent(df, data_file, sink_spec, fmt)
+            # the same staged part always lands on the same targets
+            # (Hadoop-FS-backed, so local paths and object-store URIs
+            # alike; see write_file_idempotent).
+            base = os.path.splitext(
+                data_file.rstrip("/").rsplit("/", 1)[-1])[0]
+            write_file_idempotent(df, base, sink_spec)
         else:
             # Keyed sinks (JDBC upsert targets, Cassandra) are
             # idempotent by primary key — the reference's model; append.
             write_sink(df, dict(sink_spec))
-
-    def _write_file_idempotent(self, df: DataFrame, data_file: str,
-                               sink_spec: Mapping[str, Any], fmt: str) -> None:
-        # Hadoop-FS-backed temp-write + deterministic rename: works on
-        # local paths and object-store URIs alike (see write_file_idempotent).
-        base = os.path.splitext(data_file.rstrip("/").rsplit("/", 1)[-1])[0]
-        write_file_idempotent(df, base, sink_spec)
 
     # -- driver ------------------------------------------------------
     def run(self) -> PipelineResult:

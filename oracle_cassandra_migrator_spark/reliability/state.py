@@ -67,6 +67,44 @@ class LocalFSStateStore(StateStore):
             os.remove(key)
 
 
+# Driver-side metadata IO (manifests, sidecars, fingerprint manifests,
+# version-dir deletes) through the Hadoop FileSystem API, so any
+# scheme Spark reaches (file:/hdfs:/s3a:) works — resolved per path
+# from the session's Hadoop configuration.
+def _hadoop_fs(spark, path: str):
+    jvm = spark.sparkContext._jvm
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(conf), jpath
+
+
+def _write_text(spark, path: str, text: str) -> None:
+    fs, jpath = _hadoop_fs(spark, path)
+    out = fs.create(jpath, True)
+    try:
+        out.write(bytearray(text.encode("utf-8")))
+    finally:
+        out.close()
+
+
+def _read_text(spark, path: str) -> str:
+    fs, jpath = _hadoop_fs(spark, path)
+    stream = fs.open(jpath)
+    try:
+        jvm = spark.sparkContext._jvm
+        return jvm.org.apache.commons.io.IOUtils.toString(
+            stream, "UTF-8")
+    finally:
+        stream.close()
+
+
+def _delete_path(spark, path: str) -> None:
+    """Delete a file or a whole directory if it exists."""
+    fs, jpath = _hadoop_fs(spark, path)
+    if fs.exists(jpath):
+        fs.delete(jpath, True)
+
+
 class HadoopFSStateStore(StateStore):
     """Marker store over the Hadoop FileSystem API: one implementation
     for every scheme Spark itself can reach — ``file:/``, ``hdfs:/``,
@@ -77,12 +115,10 @@ class HadoopFSStateStore(StateStore):
     boto3-call-shape analog."""
 
     def __init__(self, spark):
-        self._jvm = spark._jvm
-        self._hconf = spark._jsc.hadoopConfiguration()
+        self._spark = spark
 
     def _fs(self, key: str):
-        path = self._jvm.org.apache.hadoop.fs.Path(key)
-        return path.getFileSystem(self._hconf), path
+        return _hadoop_fs(self._spark, key)
 
     def exists(self, key: str) -> bool:
         fs, path = self._fs(key)

@@ -43,17 +43,10 @@ design (bucketing them measured 620 tiny files per 1000-row trigger),
 so the probe's append term is bounded by compaction cadence, not a
 constant; and the bound assumes roughly uniform id hashing.
 
-Exactly-once: the upsert/rollup marker protocol plus the content
-fingerprint ledger (``streaming/fingerprint.py``) over the (id, vec)
-projection — true replays of a committed batch are skipped exactly,
-fresh-checkpoint runs reusing a committed id with different content
-are refused loudly, and a stale id whose marker was vacuumed is
-skipped (true replay: its rows live on in every later rebuild) or
-refused (new content — the write would be invisible to ``read_index``
-and reclaimed by the next vacuum). The marker->fingerprint crash
-window degrades that id to legacy silent-skip, same residual hole,
-same no-heal rationale as the other four state sinks (see
-streaming/neardedup.py's marker-hit comment).
+Exactly-once: the shared protocol (``fingerprint.exactly_once_applier``)
+over the (id, vec) projection, with one difference from the other
+sinks: a legacy (ledger-less) stale id is skipped, never written —
+see ``foreach_batch_ann_maintain``.
 """
 
 from __future__ import annotations
@@ -69,9 +62,15 @@ from oracle_cassandra_migrator_spark.operators import similarity
 from oracle_cassandra_migrator_spark.reliability.state import (
     LocalFSStateStore,
     StateStore,
+    _delete_path,
+    _hadoop_fs,
+    _read_text,
+    _write_text,
 )
 from oracle_cassandra_migrator_spark.streaming import fingerprint
-from oracle_cassandra_migrator_spark.streaming.upsert import _committed_ids
+from oracle_cassandra_migrator_spark.streaming.sinks import (
+    start_foreach_batch,
+)
 
 __all__ = [
     "foreach_batch_ann_maintain",
@@ -135,9 +134,7 @@ def _owned_buckets(spark, dir_path: str) -> list[int]:
     """The bucket ids a version dir actually wrote (ground truth from
     the FS listing after the write — no extra Spark job, and never a
     recorded bucket whose leaf dir does not exist)."""
-    sc = spark.sparkContext
-    path = sc._jvm.org.apache.hadoop.fs.Path(dir_path)
-    fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
+    fs, path = _hadoop_fs(spark, dir_path)
     out = []
     prefix = f"{ID_BUCKET_COL}="
     for st in fs.listStatus(path):
@@ -201,9 +198,6 @@ def read_sidecar(spark, base_dir: str, batch_id) -> dict:
     like the partitioned sink's manifests — deliberately NOT through a
     StateStore (review r11: an unused store parameter here implied a
     pluggability the body never honored)."""
-    from oracle_cassandra_migrator_spark.streaming.partitioned import (
-        _read_text)
-
     side = json.loads(_read_text(spark, _sidecar_key(base_dir, batch_id)))
     side["base_sums"] = {int(k): v for k, v in side["base_sums"].items()}
     return side
@@ -245,7 +239,8 @@ def read_index(spark, base_dir: str,
     appears in the returned schema; pre-bucket generations keep the
     flat whole-dir read."""
     store = state or LocalFSStateStore()
-    ids = _committed_ids(store, posixpath.join(base_dir, "markers"))
+    ids = [int(t) for t in fingerprint.committed_tokens(
+        store, posixpath.join(base_dir, "markers"))]
     if not ids:
         return None
     side = read_sidecar(spark, base_dir, ids[-1])
@@ -350,78 +345,22 @@ def foreach_batch_ann_maintain(
     opts = dict(algo_opts, vec_col=vec_col, id_col=id_col)
     alg = _IvfAlgo(opts) if algo == "ivf" else _PqAlgo(opts)
     store = state or LocalFSStateStore()
-    marker_dir = posixpath.join(base_dir, "markers")
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        # persist ACROSS the fingerprint aggregate and the encode/
-        # train consumption — the single-execution discipline of the
-        # other state sinks (tests/test_fingerprint_scan_once.py)
-        batch_df = batch_df.persist()
-        try:
-            _apply_once(batch_df, batch_id)
-        finally:
-            batch_df.unpersist()
-
-    def _apply_once(batch_df: DataFrame, batch_id: int) -> None:
+    def write_version(batch_df: DataFrame, batch_id: int,
+                      below: list[str]) -> bool | None:
         spark = batch_df.sparkSession
-        marker = posixpath.join(marker_dir, f"batch-{batch_id}.marker")
-        # fingerprint the SEMANTIC projection (id, vec) only — payload
-        # columns the sink ignores must not flip a replay into a
-        # collision; also the required batch consumption on skip paths
-        fp = fingerprint.batch_fingerprint(
-            batch_df.select(id_col, vec_col))
-        if store.exists(marker):
-            fingerprint.decide_replay(
-                spark, store, base_dir, batch_id, fp,
-                f"batch {batch_id} carries a committed marker at "
-                f"{base_dir!r} but its content fingerprint does not "
-                "match the committed one — a fresh-checkpoint run is "
-                "reusing a committed batch id over the same base_dir, "
-                "and skipping it would silently drop its appends. "
-                "Resume the original checkpoint, use a new base_dir, "
-                "or clear the state first.")
-            return
-        committed = _committed_ids(store, marker_dir)
-        if committed and batch_id < committed[-1]:
-            # A write below the latest committed id is junk in either
-            # shape: below the rebuild it is INVISIBLE to read_index
-            # stitching and reclaimed by the next vacuum; BETWEEN the
-            # rebuild and committed[-1] (non-contiguous markers above
-            # the rebuild — abnormal state) it WOULD be stitched while
-            # its rows were never folded into later sidecars' carried
-            # sums, silently corrupting the drift gate. decide_replay
-            # skips a vacuumed-marker true replay exactly (its rows
-            # live on in every later rebuild) and refuses new content;
-            # the legacy fall-through (pre-ledger / crash-window
-            # markers) is preserved as a skip in BOTH shapes (ADVICE
-            # r11: the old path only skipped legacy when NO committed
-            # id was below batch_id, letting a rebuild_id < batch_id <
-            # committed[-1] legacy write through to a full commit).
-            fingerprint.decide_replay(
-                spark, store, base_dir, batch_id, fp,
-                f"ANN index state at {base_dir!r} is committed "
-                f"through batch {committed[-1]}, but this stream "
-                f"is writing batch {batch_id} with DIFFERENT "
-                "content than originally committed there — a "
-                "fresh-checkpoint run over the same base_dir. Its "
-                "version would either be invisible to readers and "
-                "reclaimed by the next vacuum, or stitched without "
-                "being folded into later drift sums (silent data "
-                "loss/corruption either way). Resume the original "
-                "checkpoint, use a new base_dir, or clear the state "
-                "first.")
-            return
+        committed = [int(t) for t in below]
         appended = batch_df.select(id_col, vec_col)
         if not committed:
             # bootstrap: the index is born from the stream itself.
             # An EMPTY first batch commits nothing (the next batch
-            # bootstraps; the fp aggregate above already consumed it)
+            # bootstraps; the fp aggregate already consumed it)
             # instead of wedging the stream on an untrainable batch
             # (review r11: codebook_literal_expr raises on an empty
             # codebook, and Spark re-delivers batch 0 forever)
             n_app = appended.count()
             if n_app == 0:
-                return
+                return False
             codebook = _train_or_fallback(alg, appended)
             encoded = alg.encode(appended, codebook)
             side = {
@@ -432,12 +371,11 @@ def foreach_batch_ann_maintain(
                 "n_rows": n_app,
                 "n_buckets": _n_buckets_for(n_app),
             }
-            _commit(spark, encoded, side, batch_id, marker, fp,
-                    bucketed=True)
+            _write(spark, encoded, side, batch_id, bucketed=True)
             return
-        # Past the guards, batch_id > committed[-1] (== would have hit
-        # the marker branch), so the latest committed version is the
-        # carry base.
+        # Past the protocol's guards, batch_id > committed[-1] (== hits
+        # the marker branch, a stale id is skipped), so the latest
+        # committed version is the carry base.
         side = read_sidecar(spark, base_dir, committed[-1])
         carried = side["base_sums"]
         codebook = side["codebook"]
@@ -483,7 +421,7 @@ def foreach_batch_ann_maintain(
                 }
                 _carry_ledger(new_side, side, n_app)
                 encoded = alg.encode(appended, codebook).limit(0)
-                _commit(spark, encoded, new_side, batch_id, marker, fp)
+                _write(spark, encoded, new_side, batch_id)
                 return
             batch_sums = similarity.embedding_dim_sums_micro(
                 appended, vec_col)
@@ -530,10 +468,9 @@ def foreach_batch_ann_maintain(
                     "n_rows": total,
                     "n_buckets": _n_buckets_for(total),
                 }
-                _commit(spark, encoded, new_side, batch_id, marker, fp,
-                        bucketed=True)
+                _write(spark, encoded, new_side, batch_id, bucketed=True)
                 return
-            _commit(spark, encoded, new_side, batch_id, marker, fp)
+            _write(spark, encoded, new_side, batch_id)
         finally:
             appended.unpersist()
 
@@ -552,11 +489,8 @@ def foreach_batch_ann_maintain(
         if side.get("n_rows") is not None:
             new_side["n_rows"] = side["n_rows"] + n_app
 
-    def _commit(spark, encoded: DataFrame, side: dict, batch_id,
-                marker: str, fp: str, bucketed: bool = False) -> None:
-        from oracle_cassandra_migrator_spark.streaming.partitioned import (
-            _write_text)
-
+    def _write(spark, encoded: DataFrame, side: dict, batch_id,
+               bucketed: bool = False) -> None:
         out_dir = _index_dir(base_dir, batch_id)
         if bucketed:
             # rebuild/bootstrap only: one O(|version|) shuffle
@@ -579,14 +513,21 @@ def foreach_batch_ann_maintain(
             encoded.write.mode("overwrite").parquet(out_dir)
         _write_text(spark, _sidecar_key(base_dir, batch_id),
                     json.dumps(side))
-        store.put_marker(marker)
-        # fingerprint LAST: presence proves the marker committed
-        store.put_marker(fingerprint.fp_key(base_dir, batch_id, fp))
 
-    writer = (stream.writeStream.foreachBatch(apply)
-              .option("checkpointLocation", checkpoint_dir))
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()
+    # A legacy (ledger-less) id below the latest committed one is
+    # SKIPPED, not written, unlike the other sinks: below the rebuild
+    # its version would be invisible to read_index and reclaimed by
+    # the next vacuum; BETWEEN the rebuild and the latest id
+    # (non-contiguous markers above the rebuild — abnormal state) it
+    # WOULD be stitched while its rows were never folded into later
+    # sidecars' carried sums, silently corrupting the drift gate
+    # (ADVICE r11; pinned in tests/test_ann_stream.py). The (id, vec)
+    # projection keeps payload columns out of the fingerprint.
+    apply = fingerprint.exactly_once_applier(
+        store, base_dir, write_version, "ANN index", "appends",
+        project=lambda df: df.select(id_col, vec_col),
+        stale_legacy_writes=False)
+    return start_foreach_batch(stream, apply, checkpoint_dir, trigger)
 
 
 def vacuum_ann_index(spark, base_dir: str,
@@ -606,14 +547,12 @@ def vacuum_ann_index(spark, base_dir: str,
     are what lets a vacuumed-marker replay be skipped exactly."""
     store = state or LocalFSStateStore()
     marker_dir = posixpath.join(base_dir, "markers")
-    ids = _committed_ids(store, marker_dir)
+    ids = [int(t)
+           for t in fingerprint.committed_tokens(store, marker_dir)]
     if not ids:
         return []
     rebuild = read_sidecar(spark, base_dir, ids[-1])["rebuild_id"]
     doomed = [i for i in ids if i < rebuild]
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    conf = sc._jsc.hadoopConfiguration()
     for bid in doomed:
         # data dir AND sidecar go through the Hadoop FS API — sidecars
         # are WRITTEN via _write_text (deliberately not through a
@@ -621,12 +560,8 @@ def vacuum_ann_index(spark, base_dir: str,
         # store.delete would silently leak them under a
         # non-filesystem StateStore (ADVICE r11). Only markers (and
         # the fingerprint ledger) live in the store.
-        for target in (_index_dir(base_dir, bid),
-                       _sidecar_key(base_dir, bid)):
-            path = jvm.org.apache.hadoop.fs.Path(target)
-            fs = path.getFileSystem(conf)
-            if fs.exists(path):
-                fs.delete(path, True)
+        _delete_path(spark, _index_dir(base_dir, bid))
+        _delete_path(spark, _sidecar_key(base_dir, bid))
         store.delete(posixpath.join(marker_dir, f"batch-{bid}.marker"))
     if doomed:
         fingerprint.compact_fingerprints(

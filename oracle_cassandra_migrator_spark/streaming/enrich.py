@@ -45,6 +45,7 @@ from oracle_cassandra_migrator_spark.reliability.state import (
 from oracle_cassandra_migrator_spark.streaming.sinks import (
     consume_without_writing,
     make_idempotent_writer,
+    start_foreach_batch,
 )
 
 # join types Spark supports with the STREAM on the left of a
@@ -121,9 +122,4 @@ def refreshing_enrich_sink(
         dim = _checked(load_dim(batch_df.sparkSession), how, broadcast)
         write(batch_df.join(dim, on, how), batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(enrich_and_write)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(stream, enrich_and_write, checkpoint_dir)

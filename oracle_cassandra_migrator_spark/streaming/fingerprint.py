@@ -1,10 +1,14 @@
-"""Per-batch CONTENT-FINGERPRINT ledger shared by every foreachBatch
-sink (``neardedup``, ``upsert``, ``rollup``, both ``partitioned``
-twins): the exactly-once identity that decides "true replay of a
-committed batch" vs "fresh-checkpoint run reusing a committed batch
+"""The exactly-once commit protocol of the state-maintaining
+foreachBatch sinks (``upsert``, ``rollup``, both ``partitioned``
+twins, ``annmaintain``, ``neardedup``) and its per-batch
+CONTENT-FINGERPRINT ledger: the identity that decides "true replay of
+a committed batch" vs "fresh-checkpoint run reusing a committed batch
 id" EXACTLY, instead of by silent marker-skip (which swallows the
 colliding run's data) or by re-execution heuristics (whose admission
 idempotence is band-cap-dependent — review r10).
+``exactly_once_applier`` is the protocol itself, one body for every
+sink but ``neardedup``, which keeps its own frame (see its
+``foreach_batch_near_dedup``) around the same ledger.
 
 Ledger layout under ``<base_dir>/fingerprints/``:
 
@@ -39,9 +43,9 @@ watermark/state history — a fresh-checkpoint recovery run (the
 documented, test-pinned pattern in
 ``test_replayed_batches_still_feed_state``) legitimately re-delivers
 DIFFERENT content under a reused id, so fingerprint equality would
-misread recovery as collision. The four state-maintaining sinks this
-ledger guards (neardedup, upsert, rollup, the partitioned twins) ARE
-the stateful operator: their foreachBatch receives the raw
+misread recovery as collision. The state-maintaining sinks this
+ledger guards (neardedup, upsert, rollup, the partitioned twins,
+annmaintain) ARE the stateful operator: their foreachBatch receives the raw
 source/CDC batch, which Spark re-delivers byte-identically on every
 true replay — content identity is exactly the right discriminator.
 """
@@ -50,11 +54,16 @@ from __future__ import annotations
 
 import json
 import posixpath
+import re
 from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, functions as F
 
-from oracle_cassandra_migrator_spark.reliability.state import StateStore
+from oracle_cassandra_migrator_spark.reliability.state import (
+    StateStore,
+    _read_text,
+    _write_text,
+)
 
 # Fingerprint ALGORITHM version, embedded as the fp string's first
 # segment. If the algorithm ever changes again, bump this: entries
@@ -130,9 +139,6 @@ def fp_key(base_dir: str, batch_id, fp: str) -> str:
 
 def _manifests(spark, store: StateStore, base_dir: str) -> dict:
     """Union of all fingerprint manifests ({batch_id str: fp})."""
-    from oracle_cassandra_migrator_spark.streaming.partitioned import (
-        _read_text)
-
     out: dict = {}
     for key in store.list(fp_dir(base_dir), suffix=".json"):
         text = _read_text(spark, key)  # IO errors PROPAGATE: silently
@@ -189,9 +195,6 @@ def compact_fingerprints(spark, store: StateStore, base_dir: str,
     the latest compaction token) plus all prior manifests into
     ``manifest-<token>.json``, then delete the merged files. Write
     FIRST, delete after: a crash leaves duplicates, never losses."""
-    from oracle_cassandra_migrator_spark.streaming.partitioned import (
-        _write_text)
-
     merged = _manifests(spark, store, base_dir)
     old_manifests = store.list(fp_dir(base_dir), suffix=".json")
     merged_singles = []
@@ -216,3 +219,142 @@ def compact_fingerprints(spark, store: StateStore, base_dir: str,
         # while the new manifest was written under a plain path
         if posixpath.basename(key) != new_name:
             store.delete(key)
+
+
+_TOKEN_MARKER_RE = re.compile(r"batch-(\d+(?:c\d+)?)\.marker$")
+
+
+def token_key(tok: str) -> tuple[int, int]:
+    """Sort key of a version token: stream batch "7" = (7, 0);
+    compaction "7c2" = (7, 2) — after its base batch, before the next
+    one, so compaction never squats on a future micro-batch's id."""
+    base, _, suf = tok.partition("c")
+    return (int(base), int(suf) if suf else 0)
+
+
+def committed_tokens(store: StateStore, marker_dir: str) -> list[str]:
+    """Committed version tokens (``batch-<token>.marker`` under
+    ``marker_dir``), in commit order."""
+    out = []
+    for key in store.list(marker_dir, suffix=".marker"):
+        m = _TOKEN_MARKER_RE.search(key)
+        if m:
+            out.append(m.group(1))
+    return sorted(out, key=token_key)
+
+
+def collision_message(state_label: str, noun: str, base_dir: str,
+                      batch_id, latest: str | None = None) -> str:
+    """The refusal text for a fresh-checkpoint run reusing a batch id:
+    at a committed marker (``latest`` None) or at a stale id below the
+    ``latest`` committed token. ``noun`` names what the sink would
+    lose ("changes", "deltas", "appends", "admissions")."""
+    if latest is None:
+        what = (f"batch {batch_id} carries a committed marker at "
+                f"{base_dir!r} but its content fingerprint does not "
+                "match the committed one — a fresh-checkpoint run is "
+                "reusing a committed batch id over the same base_dir, "
+                f"and skipping it would silently drop its {noun}.")
+    else:
+        what = (f"{state_label} state at {base_dir!r} is committed "
+                f"through token {latest!r}, but this stream is writing "
+                f"batch {batch_id} with DIFFERENT content than "
+                "originally committed there — a fresh-checkpoint run "
+                f"over the same base_dir. Its {noun} would land in a "
+                "version invisible to readers and reclaimed by the "
+                "next vacuum (silent data loss).")
+    return (what + " Resume the original checkpoint, use a new "
+            "base_dir, or clear the state first.")
+
+
+def exactly_once_applier(
+    store: StateStore,
+    base_dir: str,
+    write_version: Callable[[DataFrame, int, list[str]], bool | None],
+    state_label: str,
+    noun: str,
+    project: Callable[[DataFrame], DataFrame] | None = None,
+    stale_legacy_writes: bool = True,
+) -> Callable[[DataFrame, int], None]:
+    """The exactly-once commit protocol, as the ``(batch_df,
+    batch_id)`` callable ``foreachBatch`` takes. The sink's versions
+    live under ``base_dir``, one per token (the batch id, or a
+    compaction's ``"<base>c<k>"``); ``markers/batch-<token>.marker``
+    commits a version, and readers resolve committed tokens only, so a
+    batch never reads its own uncommitted output. Per micro-batch:
+
+    1. The batch is persisted for the whole call: the fingerprint job
+       materializes the cache, and the version write reads it instead
+       of re-running the source scan and upstream transforms (pinned
+       by tests/test_fingerprint_scan_once.py).
+    2. ``batch_fingerprint`` over ``project(batch_df)`` (the whole
+       batch when ``project`` is None). Sinks that read only some
+       columns project to them, so a payload column they ignore can
+       neither flip a true replay into a collision nor break hashing.
+       This aggregate job is also the batch consumption Spark's
+       stateful operators upstream need on every skip path below.
+    3. Marker already committed: ``decide_replay``. A true replay is
+       skipped; a pre-ledger ("legacy") marker keeps the old skip;
+       different content under the id is refused with RuntimeError.
+    4. Stale id, below the latest committed token: a version written
+       there would be invisible to readers and reclaimed by the next
+       vacuum. A true replay whose marker was vacuumed is skipped (its
+       effect lives on in every later version); new content is
+       refused; a legacy id writes and commits its (deterministic,
+       invisible) version when ``stale_legacy_writes``, the
+       pre-ledger behavior, and is skipped otherwise.
+    5. ``write_version(batch_df, batch_id, below)`` writes the version;
+       ``below`` is the committed tokens under this batch's, in commit
+       order (the last is the predecessor to merge into). It returns
+       False when there is nothing to commit.
+    6. Commit: the marker FIRST, then the fingerprint single, so a
+       single's presence proves its batch (data and marker) committed —
+       the invariant step 4's skip relies on.
+
+    Crash and replay, case by case:
+
+    - Crash before the marker: Spark re-delivers the identical batch,
+      which recomputes from the same predecessor and overwrites its
+      own version; the half-written version was never readable.
+    - Crash between the marker and the fingerprint (the one residual
+      hole): the id is marker-committed but ledger-less, "legacy" for
+      good, so a later fresh-checkpoint collision at that id is skipped
+      silently, like pre-ledger state. Deliberate: healing the ledger
+      from a replay's own content could record a COLLIDING run's
+      fingerprint and wedge the original checkpoint's true replay
+      (streaming/neardedup.py's marker-hit comment; ADVICE r10)."""
+    marker_dir = posixpath.join(base_dir, "markers")
+
+    def apply(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df = batch_df.persist()
+        try:
+            _apply_once(batch_df, batch_id)
+        finally:
+            batch_df.unpersist()
+
+    def _apply_once(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        token = str(batch_id)
+        marker = posixpath.join(marker_dir, f"batch-{token}.marker")
+        fp = batch_fingerprint(
+            batch_df if project is None else project(batch_df))
+        if store.exists(marker):
+            decide_replay(spark, store, base_dir, token, fp,
+                          collision_message(state_label, noun, base_dir,
+                                            batch_id))
+            return
+        committed = committed_tokens(store, marker_dir)
+        if committed and token_key(token) < token_key(committed[-1]):
+            decision = decide_replay(
+                spark, store, base_dir, token, fp,
+                collision_message(state_label, noun, base_dir, batch_id,
+                                  committed[-1]))
+            if decision == "skip" or not stale_legacy_writes:
+                return
+        below = [t for t in committed if token_key(t) < token_key(token)]
+        if write_version(batch_df, batch_id, below) is False:
+            return
+        store.put_marker(marker)
+        store.put_marker(fp_key(base_dir, token, fp))
+
+    return apply

@@ -73,8 +73,16 @@ from oracle_cassandra_migrator_spark.operators.dedup import (
 from oracle_cassandra_migrator_spark.reliability.state import (
     LocalFSStateStore,
     StateStore,
+    _delete_path,
 )
 from oracle_cassandra_migrator_spark.streaming import fingerprint
+from oracle_cassandra_migrator_spark.streaming.fingerprint import (
+    committed_tokens,
+    token_key,
+)
+from oracle_cassandra_migrator_spark.streaming.sinks import (
+    start_foreach_batch,
+)
 
 K = LSH_BANDS * LSH_ROWS
 
@@ -267,10 +275,7 @@ def _live_tokens(store: StateStore, marker_dir: str) -> list[str]:
     future micro-batch's id). A compaction REWRITES everything
     committed at or before it, so the live set is the latest
     compaction (if any) plus every later stream batch."""
-    from oracle_cassandra_migrator_spark.streaming.partitioned import (
-        _committed_tokens)
-
-    tokens = _committed_tokens(store, marker_dir)
+    tokens = committed_tokens(store, marker_dir)
     last_c = None
     for i, t in enumerate(tokens):
         if "c" in t:
@@ -323,7 +328,16 @@ def foreach_batch_near_dedup(
     different content is refused loudly. Fingerprint singles are
     merged into one JSON manifest per vacuum, so the ledger's file
     count is bounded by the maintenance cadence, not the batch
-    cadence."""
+    cadence.
+
+    The gate keeps its own per-batch frame rather than
+    ``fingerprint.exactly_once_applier``: a legacy marker re-executes
+    admission instead of skipping, staleness is measured against the
+    latest COMPACTION rather than the latest committed batch, and a
+    legacy id below the compaction commits an empty version and its
+    marker WITHOUT a fingerprint single, guarded by the admission
+    result — a commit shape the shared marker-then-fingerprint order
+    does not have."""
     store = state or LocalFSStateStore()
     marker_dir = posixpath.join(base_dir, "markers")
 
@@ -340,9 +354,6 @@ def foreach_batch_near_dedup(
             batch_df.unpersist()
 
     def _apply_once(batch_df: DataFrame, batch_id: int) -> None:
-        from oracle_cassandra_migrator_spark.streaming.partitioned import (
-            _committed_tokens, _token_key)
-
         marker = posixpath.join(marker_dir, f"batch-{batch_id}.marker")
         spark = batch_df.sparkSession
         # one small aggregate job — also Spark's required batch
@@ -359,13 +370,8 @@ def foreach_batch_near_dedup(
             # fingerprint decides EXACTLY:
             decision = fingerprint.decide_replay(
                 spark, store, base_dir, batch_id, fp,
-                f"batch {batch_id} carries a committed marker at "
-                f"{base_dir!r} but its content fingerprint does not "
-                "match the committed one — a fresh-checkpoint run is "
-                "reusing a committed batch id over the same base_dir, "
-                "and skipping it would silently drop its admissions. "
-                "Resume the original checkpoint, use a new base_dir, "
-                "or clear the state first.")
+                fingerprint.collision_message(
+                    "near-dedup", "admissions", base_dir, batch_id))
             if decision == "skip":
                 return  # true replay of the committed content — no-op
             # Legacy marker (pre-fingerprint state, or a crash in the
@@ -398,10 +404,10 @@ def foreach_batch_near_dedup(
         # FRESH-checkpoint run over the same base_dir restarts batch
         # ids at 0, and its batches carry NEW admissions that would
         # commit below the compaction token and silently vanish.
-        compactions = [t for t in _committed_tokens(store, marker_dir)
+        compactions = [t for t in committed_tokens(store, marker_dir)
                        if "c" in t]
         below_compaction = bool(compactions) and (
-            _token_key(str(batch_id)) < _token_key(compactions[-1]))
+            token_key(str(batch_id)) < token_key(compactions[-1]))
         if below_compaction:
             # marker vacuumed. The ledger decides (review r10 — this
             # was the one decision point still resting on the
@@ -468,10 +474,7 @@ def foreach_batch_near_dedup(
         finally:
             adm_sigs.unpersist()
 
-    writer = (stream.writeStream.foreachBatch(apply)
-              .option("checkpointLocation", checkpoint_dir))
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()
+    return start_foreach_batch(stream, apply, checkpoint_dir, trigger)
 
 
 def compact_near_dedup(spark, base_dir: str,
@@ -495,16 +498,13 @@ def compact_near_dedup(spark, base_dir: str,
     a doc_id/band_key repartition, so K versions x P files collapse to
     a handful sized by the data. Returns the new token; run
     ``vacuum_near_dedup`` after to reclaim superseded versions."""
-    from oracle_cassandra_migrator_spark.streaming.partitioned import (
-        _committed_tokens, _token_key)
-
     store = state or LocalFSStateStore()
     marker_dir = posixpath.join(base_dir, "markers")
-    tokens = _committed_tokens(store, marker_dir)
+    tokens = committed_tokens(store, marker_dir)
     if not tokens:
         raise ValueError("nothing to compact: no committed versions")
     live = _live_tokens(store, marker_dir)
-    base, suf = _token_key(tokens[-1])
+    base, suf = token_key(tokens[-1])
     new_token = f"{base}c{suf + 1}"
     sigs = spark.read.parquet(
         *[posixpath.join(base_dir, f"sigs-v{t}") for t in live])
@@ -554,22 +554,17 @@ def vacuum_near_dedup(spark, base_dir: str,
     never losses; a truncated manifest is skipped by readers and
     re-merged next vacuum). Zero-byte singles above the compaction
     stay O(batches-since-maintenance)."""
-    from oracle_cassandra_migrator_spark.streaming.partitioned import (
-        _committed_tokens, _hadoop_fs, _token_key)
-
     store = state or LocalFSStateStore()
     marker_dir = posixpath.join(base_dir, "markers")
-    tokens = _committed_tokens(store, marker_dir)
+    tokens = committed_tokens(store, marker_dir)
     live = set(_live_tokens(store, marker_dir))
     doomed = [t for t in tokens if t not in live]
     for tok in doomed:
         store.delete(
             posixpath.join(marker_dir, f"batch-{tok}.marker"))
         for prefix in ("sigs", "bands"):
-            fs, jd = _hadoop_fs(
+            _delete_path(
                 spark, posixpath.join(base_dir, f"{prefix}-v{tok}"))
-            if fs.exists(jd):
-                fs.delete(jd, True)
     # Fingerprint-ledger compaction: singles below the latest
     # compaction token + all prior manifests -> one manifest.
     compactions = [t for t in tokens if "c" in t]
@@ -577,5 +572,5 @@ def vacuum_near_dedup(spark, base_dir: str,
         ctoken = compactions[-1]
         fingerprint.compact_fingerprints(
             spark, store, base_dir,
-            lambda bid: _token_key(bid) < _token_key(ctoken), ctoken)
+            lambda bid: token_key(bid) < token_key(ctoken), ctoken)
     return doomed

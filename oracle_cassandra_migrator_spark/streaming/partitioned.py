@@ -39,27 +39,15 @@ AFTER stream batch 7 and BEFORE batch 8: compaction never consumes a
 future stream batch id, so a post-compaction micro-batch can never be
 mistaken for a replay (that collision would silently discard data).
 
-Crash/replay analysis is upsert's, extended to the manifest: version
-dir and manifest are written BEFORE the marker, replays
-deterministically overwrite both, and readers resolve only committed
+Replay, collision and crash handling is the shared exactly-once
+protocol (``fingerprint.exactly_once_applier``); the version dir and
+its manifest are both written before the marker, so a replay
+deterministically overwrites both and readers resolve only committed
 manifests. Read amplification (latest snapshot stitches buckets from
 several versions) is bounded by ``compact_partitioned``; vacuum
 deletes marker FIRST, then manifest, then data — a crash mid-vacuum
 leaves invisible orphans, never a committed id whose manifest is
-gone. Reusing a base_dir with a FRESH checkpoint is refused LOUDLY,
-not silently swallowed: Spark restarts batch ids at 0, and the
-per-batch content-fingerprint ledger (``streaming/fingerprint.py``)
-distinguishes a true replay (same content — skipped exactly) from a
-colliding new run (different content — RuntimeError), both under a
-still-committed marker and at a stale id whose marker was vacuumed
-(same contract as upsert.py/rollup.py/neardedup.py). The contract's
-one residual hole is shared too: a crash in the marker->fingerprint
-window leaves that token marker-committed but ledger-less ("legacy"),
-so a later fresh-checkpoint collision there is silently skipped like
-pre-ledger state — deliberate, because healing the ledger from a
-replay's own content could record a colliding fingerprint and wedge
-the original checkpoint (neardedup.py's marker-hit comment; ADVICE
-r10).
+gone.
 
 Reference parity: generalizes the reference's overwrite-everything
 staging (verizon_table_migration_Rakesh_filters.py:187-223) into
@@ -71,7 +59,6 @@ from __future__ import annotations
 
 import json
 import posixpath
-import re
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, functions as F
@@ -81,8 +68,18 @@ from oracle_cassandra_migrator_spark.operators.merge import merge_upsert
 from oracle_cassandra_migrator_spark.reliability.state import (
     LocalFSStateStore,
     StateStore,
+    _delete_path,
+    _read_text,
+    _write_text,
 )
 from oracle_cassandra_migrator_spark.streaming import fingerprint
+from oracle_cassandra_migrator_spark.streaming.fingerprint import (
+    committed_tokens,
+    token_key,
+)
+from oracle_cassandra_migrator_spark.streaming.sinks import (
+    start_foreach_batch,
+)
 
 __all__ = [
     "foreach_batch_upsert_partitioned",
@@ -94,55 +91,6 @@ __all__ = [
     "compact_partitioned",
     "vacuum_partitioned",
 ]
-
-_TOKEN_MARKER_RE = re.compile(r"batch-(\d+(?:c\d+)?)\.marker$")
-
-
-def _token_key(tok: str) -> tuple[int, int]:
-    """Sort key: stream batch "7" = (7, 0); compaction "7c2" = (7, 2)
-    — after its base batch, before the next one."""
-    base, _, suf = tok.partition("c")
-    return (int(base), int(suf) if suf else 0)
-
-
-def _committed_tokens(store: StateStore, marker_dir: str) -> list[str]:
-    out = []
-    for key in store.list(marker_dir, suffix=".marker"):
-        m = _TOKEN_MARKER_RE.search(key)
-        if m:
-            out.append(m.group(1))
-    return sorted(out, key=_token_key)
-
-
-# Manifests are tiny JSON objects; go through the Hadoop FileSystem
-# API so any scheme (file:/hdfs:/s3a:) works — vacuum_snapshots's
-# convention.
-def _hadoop_fs(spark, path: str):
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(conf), jpath
-
-
-def _write_text(spark, path: str, text: str) -> None:
-    fs, jpath = _hadoop_fs(spark, path)
-    out = fs.create(jpath, True)
-    try:
-        out.write(bytearray(text.encode("utf-8")))
-    finally:
-        out.close()
-
-
-def _read_text(spark, path: str) -> str:
-    fs, jpath = _hadoop_fs(spark, path)
-    stream = fs.open(jpath)
-    try:
-        jvm = spark.sparkContext._jvm
-        return jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8")
-    finally:
-        stream.close()
-
 
 def _manifest_path(base_dir: str, token: str) -> str:
     return posixpath.join(base_dir, f"manifest-v{token}.json")
@@ -256,7 +204,7 @@ def latest_partitioned_snapshot(
     is empty). Readers never see uncommitted version dirs or
     manifests — commits are marker-gated, the upsert invariant."""
     store = state or LocalFSStateStore()
-    tokens = _committed_tokens(
+    tokens = committed_tokens(
         store, posixpath.join(base_dir, "markers"))
     if not tokens:
         return None
@@ -281,7 +229,7 @@ def lookup_keys(spark, base_dir: str, keys: list[str],
     buckets hold no data returns an EMPTY frame (same schema), not
     None."""
     store = state or LocalFSStateStore()
-    tokens = _committed_tokens(
+    tokens = committed_tokens(
         store, posixpath.join(base_dir, "markers"))
     if not tokens:
         return None
@@ -336,81 +284,25 @@ def _partitioned_applier(
     store: StateStore,
     merge_fn: Callable[[DataFrame, DataFrame | None], DataFrame],
     batch_prep: Callable[[DataFrame], DataFrame],
-    bucket_source: str,
 ):
-    """The shared version/manifest/marker protocol for both
-    partitioned maintainers — one body, so a protocol fix cannot land
-    in one twin and miss the other. ``batch_prep`` turns the raw batch
-    into the frame that both picks the touched buckets and feeds
-    ``merge_fn(prepped, current_or_None)``; ``bucket_source`` is
-    "prepped" when touched buckets come from the prepped frame's keys
-    (both maintainers)."""
-    marker_dir = posixpath.join(base_dir, "markers")
+    """The shared version/manifest write for both partitioned
+    maintainers, inside the exactly-once protocol — one body, so a
+    fix cannot land in one twin and miss the other. ``batch_prep``
+    turns the raw batch into the frame that both picks the touched
+    buckets and feeds ``merge_fn(prepped, current_or_None)``."""
     bexpr = _bucket_expr(keys, n_buckets)
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        # persist ACROSS the fingerprint aggregate and batch_prep: the
-        # fp job materializes the cache, so prepped below reads the
-        # cached batch instead of re-running the source scan +
-        # upstream transforms (ADVICE r10; pinned by
-        # tests/test_fingerprint_scan_once.py)
-        batch_df = batch_df.persist()
-        try:
-            _apply_once(batch_df, batch_id)
-        finally:
-            batch_df.unpersist()
-
-    def _apply_once(batch_df: DataFrame, batch_id: int) -> None:
+    def write_version(batch_df: DataFrame, batch_id: int,
+                      below: list[str]) -> None:
         token = str(batch_id)
-        marker = posixpath.join(marker_dir, f"batch-{token}.marker")
         spark = batch_df.sparkSession
-        # one map-side aggregate job; also the required batch
-        # consumption on every skip path (replaces the separate
-        # consume_without_writing pass) — see streaming/fingerprint.py
-        fp = fingerprint.batch_fingerprint(batch_df)
-        if store.exists(marker):
-            # committed-marker hit: replay vs fresh-checkpoint
-            # collision decided by CONTENT, never by silent skip;
-            # skip and legacy both return (pre-ledger markers keep
-            # the old skip)
-            fingerprint.decide_replay(
-                spark, store, base_dir, token, fp,
-                f"batch {batch_id} carries a committed marker at "
-                f"{base_dir!r} but its content fingerprint does not "
-                "match the committed one — a fresh-checkpoint run is "
-                "reusing a committed batch id over the same base_dir, "
-                "and skipping it would silently drop its changes. "
-                "Resume the original checkpoint, use a new base_dir, "
-                "or clear the state first.")
-            return
-        all_tokens = _committed_tokens(store, marker_dir)
-        if all_tokens and _token_key(token) < _token_key(all_tokens[-1]):
-            # a version below the latest committed token is INVISIBLE
-            # (readers resolve the latest manifest) and reclaimed by
-            # the next vacuum: skip a vacuumed-marker true replay
-            # exactly, refuse new content at a stale id, let legacy
-            # pre-ledger tokens keep the old behavior
-            if fingerprint.decide_replay(
-                    spark, store, base_dir, token, fp,
-                    f"partitioned state at {base_dir!r} is committed "
-                    f"through token {all_tokens[-1]!r}, but this "
-                    f"stream is writing batch {batch_id} with "
-                    "DIFFERENT content than originally committed "
-                    "there — a fresh-checkpoint run over the same "
-                    "base_dir. Its version would be invisible to "
-                    "reads and reclaimed by the next vacuum (silent "
-                    "data loss). Resume the original checkpoint, use "
-                    "a new base_dir, or clear the state first.") == "skip":
-                return
         # persisted: the touched-bucket collect AND the merge/write
         # both consume it — without this the batch aggregation and
         # source scan run twice per trigger
         prepped = batch_prep(batch_df).persist()
         try:
-            prev = [t for t in all_tokens
-                    if _token_key(t) < (batch_id, 0)]
-            if prev:
-                manifest = _read_manifest(spark, base_dir, prev[-1])
+            if below:
+                manifest = _read_manifest(spark, base_dir, below[-1])
                 _check_manifest(manifest, n_buckets, keys)
                 owners = manifest["owners"]
                 prev_ddl = manifest.get("schema")
@@ -459,13 +351,11 @@ def _partitioned_applier(
                     new_owners.pop(b, None)
             _write_manifest(spark, base_dir, token, n_buckets, keys,
                             new_owners, schema_ddl)
-            store.put_marker(marker)
-            # fingerprint LAST: presence proves the marker committed
-            store.put_marker(fingerprint.fp_key(base_dir, token, fp))
         finally:
             prepped.unpersist()
 
-    return apply
+    return fingerprint.exactly_once_applier(
+        store, base_dir, write_version, "partitioned", "changes")
 
 
 def make_upsert_applier(
@@ -501,7 +391,7 @@ def make_upsert_applier(
         return merge_upsert(current, winners, keys, allow_missing=True)
 
     return _partitioned_applier(
-        base_dir, keys, n_buckets, store, merge, prep, "prepped")
+        base_dir, keys, n_buckets, store, merge, prep)
 
 
 def foreach_batch_upsert_partitioned(
@@ -523,10 +413,7 @@ def foreach_batch_upsert_partitioned(
     the manifest on every batch; re-bucketing is a new table)."""
     apply = make_upsert_applier(
         base_dir, keys, order_by, n_buckets=n_buckets, state=state)
-    writer = (stream.writeStream.foreachBatch(apply)
-              .option("checkpointLocation", checkpoint_dir))
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()
+    return start_foreach_batch(stream, apply, checkpoint_dir, trigger)
 
 
 def make_rollup_applier(
@@ -566,7 +453,7 @@ def make_rollup_applier(
             base, deltas, keys, n_col=n_col, sum_col=sum_col)
 
     return _partitioned_applier(
-        base_dir, keys, n_buckets, store, merge, prep, "prepped")
+        base_dir, keys, n_buckets, store, merge, prep)
 
 
 def foreach_batch_rollup_partitioned(
@@ -596,10 +483,7 @@ def foreach_batch_rollup_partitioned(
     apply = make_rollup_applier(
         base_dir, keys, new_expr, old_expr, n_buckets=n_buckets,
         n_col=n_col, sum_col=sum_col, op_col=op_col, state=state)
-    writer = (stream.writeStream.foreachBatch(apply)
-              .option("checkpointLocation", checkpoint_dir))
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()
+    return start_foreach_batch(stream, apply, checkpoint_dir, trigger)
 
 
 def compact_partitioned(spark, base_dir: str,
@@ -616,13 +500,13 @@ def compact_partitioned(spark, base_dir: str,
     overwrites it. Returns the new token."""
     store = state or LocalFSStateStore()
     marker_dir = posixpath.join(base_dir, "markers")
-    tokens = _committed_tokens(store, marker_dir)
+    tokens = committed_tokens(store, marker_dir)
     if not tokens:
         raise ValueError("nothing to compact: no committed versions")
     manifest = _read_manifest(spark, base_dir, tokens[-1])
     owners = manifest["owners"]
     keys = manifest["keys"]
-    base, suf = _token_key(tokens[-1])
+    base, suf = token_key(tokens[-1])
     new_token = f"{base}c{suf + 1}"
     if owners:
         current = _read_buckets(
@@ -664,7 +548,7 @@ def vacuum_partitioned(spark, base_dir: str, keep_last: int = 2,
         raise ValueError("keep_last must be >= 1")
     store = state or LocalFSStateStore()
     marker_dir = posixpath.join(base_dir, "markers")
-    tokens = _committed_tokens(store, marker_dir)
+    tokens = committed_tokens(store, marker_dir)
     kept = tokens[-keep_last:]
     referenced: set[str] = set()
     for t in kept:
@@ -674,13 +558,8 @@ def vacuum_partitioned(spark, base_dir: str, keep_last: int = 2,
     for tok in doomed:
         store.delete(
             posixpath.join(marker_dir, f"batch-{tok}.marker"))
-        fs, jm = _hadoop_fs(spark, _manifest_path(base_dir, tok))
-        if fs.exists(jm):
-            fs.delete(jm, False)
-        _, jd = _hadoop_fs(
-            spark, posixpath.join(base_dir, f"v{tok}"))
-        if fs.exists(jd):
-            fs.delete(jd, True)
+        _delete_path(spark, _manifest_path(base_dir, tok))
+        _delete_path(spark, posixpath.join(base_dir, f"v{tok}"))
     if doomed and kept:
         # fingerprints of vacuumed tokens survive (they decide
         # vacuumed-marker replays exactly); merge their singles into
@@ -688,6 +567,6 @@ def vacuum_partitioned(spark, base_dir: str, keep_last: int = 2,
         boundary = kept[0]
         fingerprint.compact_fingerprints(
             spark, store, base_dir,
-            lambda bid: _token_key(bid) < _token_key(boundary),
+            lambda bid: token_key(bid) < token_key(boundary),
             boundary)
     return doomed

@@ -12,16 +12,12 @@ retractions aren't expressible in append-mode aggregations. Delta
 maintenance is: a delete is just a (-1, -old) contribution.
 
 Same version/marker protocol as upsert (snapshot-v<batchId> +
-batch-<batchId>.marker through the StateStore), so every crash /
-replay case inherits upsert's analysis — including the one residual
-hole: a crash in the marker->fingerprint window leaves that batch id
-marker-committed but ledger-less ("legacy"), so a later
-fresh-checkpoint collision at that id is silently skipped like
-pre-ledger state. Deliberate (healing from a replay's own content
-could record a colliding fingerprint and wedge the original
-checkpoint — see streaming/neardedup.py's marker-hit comment; ADVICE
-r10). Time travel (``snapshot_at``) works on rollups too. Per batch the work is
-O(|batch| + |groups|): the delta aggregate shuffles only the batch,
+batch-<batchId>.marker through the StateStore), and the same shared
+exactly-once protocol: see ``fingerprint.exactly_once_applier`` for
+replay, collision and crash handling — which matters more here, since
+the delta merge is not idempotent. Time travel (``snapshot_at``) works
+on rollups too. Per batch the work is O(|batch| + |groups|): the
+delta aggregate shuffles only the batch,
 the merge re-aggregates the (groups + delta-groups) union — with the
 rollup stored bucketed by the group keys even that collapses to the
 delta side (operators/incremental.py docstring). The base fact
@@ -49,10 +45,10 @@ from oracle_cassandra_migrator_spark.reliability.state import (
     StateStore,
 )
 from oracle_cassandra_migrator_spark.streaming import fingerprint
-from oracle_cassandra_migrator_spark.streaming.upsert import (
-    _committed_ids,
-    latest_snapshot,
+from oracle_cassandra_migrator_spark.streaming.sinks import (
+    start_foreach_batch,
 )
+from oracle_cassandra_migrator_spark.streaming.upsert import latest_snapshot
 
 __all__ = ["foreach_batch_rollup", "latest_rollup"]
 
@@ -85,75 +81,23 @@ def foreach_batch_rollup(
             f"foreach_batch_rollup: key column(s) {sorted(clash)} "
             "collide with the fingerprint projection's reserved "
             "aliases (__op/__new/__old) — rename the key(s)")
-    store = state or LocalFSStateStore()
-    marker_dir = posixpath.join(base_dir, "markers")
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        marker = posixpath.join(marker_dir, f"batch-{batch_id}.marker")
-        # persist ACROSS the fingerprint aggregate and the delta
-        # merge: the fp job materializes the cache, so
-        # cdc_to_group_deltas below reads the cached batch instead of
-        # re-running the source scan + upstream transforms (ADVICE
-        # r10; pinned by tests/test_fingerprint_scan_once.py)
-        batch_df = batch_df.persist()
-        try:
-            _apply_once(batch_df, batch_id, marker)
-        finally:
-            batch_df.unpersist()
+    def project(batch_df: DataFrame) -> DataFrame:
+        # the SEMANTIC projection (op, keys, measure images): the rollup
+        # reads nothing else, and a whole-row fingerprint would fail on
+        # map-typed payloads (unhashable — review r10)
+        return batch_df.select(
+            F.col(op_col).alias("__op"), *[F.col(k) for k in keys],
+            F.expr(new_expr).alias("__new"),
+            F.expr(old_expr).alias("__old"))
 
-    def _apply_once(batch_df: DataFrame, batch_id: int,
-                    marker: str) -> None:
-        spark = batch_df.sparkSession
-        # one map-side aggregate job; also the required batch
-        # consumption on every skip path (upsert.py's protocol — the
-        # non-idempotent delta merge makes silent collision swallowing
-        # or an invisible stale-id write even more dangerous here).
-        # Fingerprint the SEMANTIC projection only (op, keys, measure
-        # images): the rollup reads nothing else, so a payload column
-        # the sink ignores can neither flip a replay into a collision
-        # nor break hashing (map-typed payloads are unhashable — a
-        # whole-row fingerprint would fail every batch; review r10).
-        fp = fingerprint.batch_fingerprint(
-            batch_df.select(
-                F.col(op_col).alias("__op"),
-                *[F.col(k) for k in keys],
-                F.expr(new_expr).alias("__new"),
-                F.expr(old_expr).alias("__old")))
-        if store.exists(marker):
-            # skip and legacy both return (pre-ledger markers keep
-            # the old skip); collision raises
-            fingerprint.decide_replay(
-                spark, store, base_dir, batch_id, fp,
-                f"batch {batch_id} carries a committed marker at "
-                f"{base_dir!r} but its content fingerprint does not "
-                "match the committed one — a fresh-checkpoint run is "
-                "reusing a committed batch id over the same base_dir, "
-                "and skipping it would silently drop its deltas. "
-                "Resume the original checkpoint, use a new base_dir, "
-                "or clear the state first.")
-            return
-        committed = _committed_ids(store, marker_dir)
-        if committed and batch_id < committed[-1]:
-            # vacuumed-marker true replay: already rolled up — skip;
-            # new content at a stale id: refuse; legacy: old behavior
-            if fingerprint.decide_replay(
-                    spark, store, base_dir, batch_id, fp,
-                    f"rollup state at {base_dir!r} is committed "
-                    f"through batch {committed[-1]}, but this stream "
-                    f"is writing batch {batch_id} with DIFFERENT "
-                    "content than originally committed there — a "
-                    "fresh-checkpoint run over the same base_dir. Its "
-                    "snapshot would be invisible to readers and "
-                    "reclaimed by the next vacuum (silent data loss). "
-                    "Resume the original checkpoint, use a new "
-                    "base_dir, or clear the state first.") == "skip":
-                return
+    def write_version(batch_df: DataFrame, batch_id: int,
+                      below: list[str]) -> None:
         deltas = cdc_to_group_deltas(
             batch_df, keys, new_expr, old_expr, op_col=op_col)
-        prev_ids = [i for i in committed if i < batch_id]
-        if prev_ids:
-            base = spark.read.parquet(posixpath.join(
-                base_dir, f"snapshot-v{prev_ids[-1]}"))
+        if below:
+            base = batch_df.sparkSession.read.parquet(posixpath.join(
+                base_dir, f"snapshot-v{below[-1]}"))
         else:
             # empty base with the maintained schema: keys + (n, s)
             base = (deltas
@@ -166,11 +110,8 @@ def foreach_batch_rollup(
             base, deltas, keys, n_col=n_col, sum_col=sum_col)
         merged.write.mode("overwrite").parquet(
             posixpath.join(base_dir, f"snapshot-v{batch_id}"))
-        store.put_marker(marker)
-        # fingerprint LAST: presence proves the marker committed
-        store.put_marker(fingerprint.fp_key(base_dir, batch_id, fp))
 
-    writer = (stream.writeStream.foreachBatch(apply)
-              .option("checkpointLocation", checkpoint_dir))
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()
+    apply = fingerprint.exactly_once_applier(
+        state or LocalFSStateStore(), base_dir, write_version,
+        "rollup", "deltas", project=project)
+    return start_foreach_batch(stream, apply, checkpoint_dir, trigger)

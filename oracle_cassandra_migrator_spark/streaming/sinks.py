@@ -21,7 +21,7 @@ they are idempotent by primary key, the reference's own model.
 from __future__ import annotations
 
 import os
-from typing import Any, Mapping
+from typing import Any, Callable, Mapping
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
@@ -35,6 +35,23 @@ from oracle_cassandra_migrator_spark.sinks.writers import (
     write_file_idempotent,
     write_sink,
 )
+
+
+def start_foreach_batch(
+    stream: DataFrame,
+    apply: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    trigger: Mapping[str, Any] | None = None,
+) -> StreamingQuery:
+    """Start ``stream`` with ``apply`` as its foreachBatch function —
+    the one stream starter every foreachBatch sink in this package
+    uses. ``trigger`` is the ``DataStreamWriter.trigger`` keyword
+    argument (e.g. ``{"processingTime": "10 seconds"}``); unset means
+    ``availableNow``: drain what is there, then stop."""
+    return (stream.writeStream.foreachBatch(apply)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(**(trigger or {"availableNow": True}))
+            .start())
 
 
 def consume_without_writing(batch_df: DataFrame) -> None:
@@ -94,10 +111,6 @@ def foreach_batch_sink(
 ) -> StreamingQuery:
     """Start the stream, writing each micro-batch through write_sink
     with marker-based idempotence."""
-    return (
-        stream.writeStream.foreachBatch(
-            make_idempotent_writer(sink_spec, marker_dir, state))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_foreach_batch(
+        stream, make_idempotent_writer(sink_spec, marker_dir, state),
+        checkpoint_dir)

@@ -16,29 +16,8 @@ Version protocol (all through the StateStore, any Hadoop scheme):
 ``snapshot-v<batchId>`` directories, committed by a
 ``batch-<batchId>.marker``. A batch reads the LATEST COMMITTED version
 (never its own uncommitted output), writes its successor, then drops
-the marker. Crash-and-replay safety, case by case:
-
-- replay of a marker-committed batch: skipped EXACTLY via the content
-  fingerprint ledger (``streaming/fingerprint.py``) — a
-  fresh-checkpoint run reusing the id with different content is
-  refused loudly instead of silently swallowed, and a stale id whose
-  marker was vacuumed is skipped (true replay) or refused (new
-  content) instead of writing an invisible snapshot.
-- crash between write and marker: the replayed batch recomputes from
-  the same predecessor and OVERWRITES its own ``snapshot-v<id>`` —
-  deterministic inputs (Spark replays the identical batch) make the
-  rewrite byte-equivalent; the half-written orphan is never readable
-  because readers go through ``latest_snapshot`` (committed markers
-  only).
-- crash between marker and fingerprint (the one residual hole, shared
-  with rollup/partitioned/neardedup): that batch id carries a marker
-  but no ledger entry, so it is permanently "legacy" — a later
-  fresh-checkpoint collision at that id is silently skipped, exactly
-  the pre-ledger behavior. Deliberate: healing the ledger from a
-  replay's own content could record a COLLIDING run's fingerprint and
-  wedge the original checkpoint's true replay (see
-  streaming/neardedup.py's marker-hit comment; ADVICE r10 asks for
-  this note everywhere the hole exists).
+the marker. Replay, collision and crash handling is the shared
+exactly-once protocol: see ``fingerprint.exactly_once_applier``.
 
 State is bounded by the snapshot itself (no Spark state store usage —
 the join runs as a batch job per trigger). At 100 TB the snapshot
@@ -52,7 +31,6 @@ way.
 from __future__ import annotations
 
 import posixpath
-import re
 from typing import Any
 
 from pyspark.sql import DataFrame, functions as F
@@ -62,19 +40,12 @@ from oracle_cassandra_migrator_spark.operators.merge import merge_upsert
 from oracle_cassandra_migrator_spark.reliability.state import (
     LocalFSStateStore,
     StateStore,
+    _delete_path,
 )
 from oracle_cassandra_migrator_spark.streaming import fingerprint
-
-_MARKER_RE = re.compile(r"batch-(\d+)\.marker$")
-
-
-def _committed_ids(store: StateStore, marker_dir: str) -> list[int]:
-    out = []
-    for key in store.list(marker_dir, suffix=".marker"):
-        m = _MARKER_RE.search(key)
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
+from oracle_cassandra_migrator_spark.streaming.sinks import (
+    start_foreach_batch,
+)
 
 
 def latest_snapshot(spark, base_dir: str,
@@ -83,11 +54,12 @@ def latest_snapshot(spark, base_dir: str,
     commit. Readers must come through here: uncommitted version dirs
     (crash between write and marker) are invisible by construction."""
     store = state or LocalFSStateStore()
-    ids = _committed_ids(store, posixpath.join(base_dir, "markers"))
-    if not ids:
+    tokens = fingerprint.committed_tokens(
+        store, posixpath.join(base_dir, "markers"))
+    if not tokens:
         return None
     return spark.read.parquet(
-        posixpath.join(base_dir, f"snapshot-v{ids[-1]}"))
+        posixpath.join(base_dir, f"snapshot-v{tokens[-1]}"))
 
 
 def snapshot_at(spark, base_dir: str, batch_id: int,
@@ -99,7 +71,8 @@ def snapshot_at(spark, base_dir: str, batch_id: int,
     analog of a table format's VERSION AS OF. Raises on an
     uncommitted/unknown id rather than serving a half-written dir."""
     store = state or LocalFSStateStore()
-    ids = _committed_ids(store, posixpath.join(base_dir, "markers"))
+    ids = [int(t) for t in fingerprint.committed_tokens(
+        store, posixpath.join(base_dir, "markers"))]
     if batch_id not in ids:
         raise ValueError(
             f"batch {batch_id} is not a committed snapshot version "
@@ -129,69 +102,8 @@ def foreach_batch_upsert(
     side instead of failing. Off by default so a renamed/typo'd column
     in the change stream fails the batch loudly (ADVICE r8) rather
     than silently forking the snapshot into half-null columns."""
-    store = state or LocalFSStateStore()
-    marker_dir = posixpath.join(base_dir, "markers")
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        marker = posixpath.join(marker_dir, f"batch-{batch_id}.marker")
-        # persist ACROSS the fingerprint aggregate and the snapshot
-        # merge: the fp job materializes the cache, so the winners/
-        # merge below read the cached batch instead of re-running the
-        # source scan + upstream transforms — without this the ledger
-        # doubles source-side work per trigger (ADVICE r10); pinned by
-        # tests/test_fingerprint_scan_once.py
-        batch_df = batch_df.persist()
-        try:
-            _apply_once(batch_df, batch_id, marker)
-        finally:
-            batch_df.unpersist()
-
-    def _apply_once(batch_df: DataFrame, batch_id: int,
-                    marker: str) -> None:
-        spark = batch_df.sparkSession
-        # one map-side aggregate job; also the required batch
-        # consumption on every skip path below (replaces the separate
-        # consume_without_writing pass)
-        fp = fingerprint.batch_fingerprint(batch_df)
-        if store.exists(marker):
-            # committed-marker hit: decide replay vs fresh-checkpoint
-            # collision by CONTENT, not by silently skipping — a
-            # skipped colliding run loses its batch forever (the
-            # near-dedup gate's r10 lesson, applied to every sink);
-            # skip and legacy both return (pre-ledger markers keep
-            # the old skip)
-            fingerprint.decide_replay(
-                spark, store, base_dir, batch_id, fp,
-                f"batch {batch_id} carries a committed marker at "
-                f"{base_dir!r} but its content fingerprint does not "
-                "match the committed one — a fresh-checkpoint run is "
-                "reusing a committed batch id over the same base_dir, "
-                "and skipping it would silently drop its changes. "
-                "Resume the original checkpoint, use a new base_dir, "
-                "or clear the state first.")
-            return
-        committed = _committed_ids(store, marker_dir)
-        if committed and batch_id < committed[-1]:
-            # this write would be INVISIBLE: readers resolve the
-            # LATEST committed version, and a snapshot below it is
-            # reclaimed by the next vacuum. A vacuumed-marker true
-            # replay is safe to skip (its changes live on in every
-            # later snapshot); new content at a stale id is a
-            # fresh-checkpoint run — refuse instead of losing it;
-            # legacy pre-ledger ids keep the old (deterministic,
-            # invisible) overwrite.
-            if fingerprint.decide_replay(
-                    spark, store, base_dir, batch_id, fp,
-                    f"snapshot state at {base_dir!r} is committed "
-                    f"through batch {committed[-1]}, but this stream "
-                    f"is writing batch {batch_id} with DIFFERENT "
-                    "content than originally committed there — a "
-                    "fresh-checkpoint run over the same base_dir. Its "
-                    "snapshot would be invisible to readers and "
-                    "reclaimed by the next vacuum (silent data loss). "
-                    "Resume the original checkpoint, use a new "
-                    "base_dir, or clear the state first.") == "skip":
-                return
+    def write_version(batch_df: DataFrame, batch_id: int,
+                      below: list[str]) -> None:
         # last-writer-wins WITHIN the batch: max(struct(order_by, row))
         # per key — aggregation, not a window, so it map-side-combines
         ordered = F.struct(
@@ -199,26 +111,20 @@ def foreach_batch_upsert(
         winners = (batch_df.groupBy(*keys)
                    .agg(F.max(ordered).alias("__w"))
                    .select("__w.__row.*"))
-        prev_ids = [i for i in committed if i < batch_id]
-        if prev_ids:
-            current = spark.read.parquet(posixpath.join(
-                base_dir, f"snapshot-v{prev_ids[-1]}"))
+        if below:
+            current = batch_df.sparkSession.read.parquet(
+                posixpath.join(base_dir, f"snapshot-v{below[-1]}"))
             merged = merge_upsert(current, winners, keys,
                                   allow_missing=allow_missing)
         else:
             merged = winners
         merged.write.mode("overwrite").parquet(
             posixpath.join(base_dir, f"snapshot-v{batch_id}"))
-        store.put_marker(marker)
-        # fingerprint LAST: its presence proves the marker (and the
-        # snapshot) committed — the invariant the vacuumed-id replay
-        # skip above relies on
-        store.put_marker(fingerprint.fp_key(base_dir, batch_id, fp))
 
-    writer = (stream.writeStream.foreachBatch(apply)
-              .option("checkpointLocation", checkpoint_dir))
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()
+    apply = fingerprint.exactly_once_applier(
+        state or LocalFSStateStore(), base_dir, write_version,
+        "snapshot", "changes")
+    return start_foreach_batch(stream, apply, checkpoint_dir, trigger)
 
 
 def vacuum_snapshots(spark, base_dir: str, keep_last: int = 2,
@@ -242,17 +148,11 @@ def vacuum_snapshots(spark, base_dir: str, keep_last: int = 2,
         raise ValueError("keep_last must be >= 1")
     store = state or LocalFSStateStore()
     marker_dir = posixpath.join(base_dir, "markers")
-    ids = _committed_ids(store, marker_dir)
+    ids = [int(t)
+           for t in fingerprint.committed_tokens(store, marker_dir)]
     doomed = ids[:-keep_last] if keep_last < len(ids) else []
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    conf = sc._jsc.hadoopConfiguration()
     for bid in doomed:
-        path = jvm.org.apache.hadoop.fs.Path(
-            posixpath.join(base_dir, f"snapshot-v{bid}"))
-        fs = path.getFileSystem(conf)
-        if fs.exists(path):
-            fs.delete(path, True)
+        _delete_path(spark, posixpath.join(base_dir, f"snapshot-v{bid}"))
         store.delete(posixpath.join(marker_dir, f"batch-{bid}.marker"))
     if doomed:
         boundary = ids[-keep_last]

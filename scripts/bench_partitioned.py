@@ -85,13 +85,13 @@ def main():
                          for f in files)
         return total
 
-    from oracle_cassandra_migrator_spark.streaming.upsert import (
-        _committed_ids)
+    from oracle_cassandra_migrator_spark.streaming.fingerprint import (
+        committed_tokens)
     from oracle_cassandra_migrator_spark.reliability.state import (
         LocalFSStateStore)
     store = LocalFSStateStore()
-    last_full = _committed_ids(store, f"{base}/full/markers")[-1]
-    last_part = _committed_ids(store, f"{base}/partial/markers")[-1]
+    last_full = committed_tokens(store, f"{base}/full/markers")[-1]
+    last_part = committed_tokens(store, f"{base}/partial/markers")[-1]
     out["full_apply_bytes"] = du(f"{base}/full/snapshot-v{last_full}")
     out["partial_apply_bytes"] = du(f"{base}/partial/v{last_part}")
     out["full_apply_rows"] = spark.read.parquet(

@@ -71,6 +71,22 @@ def test_partial_resume_rewrites_only_missing_file(spark, tmp_path):
     assert r2.files_skipped == 2
 
 
+def test_upper_case_file_sink_format_keeps_every_staged_file(
+        spark, tmp_path):
+    """Sink formats are case-insensitive (write_sink lower-cases them),
+    so "PARQUET" must take the idempotent per-file path too: a plain
+    write_sink would overwrite the sink with each staged file in turn,
+    keeping only the last file's rows."""
+    spec = make_spec(tmp_path)
+    spec["transform_partitions"] = 2
+    spec["sink"] = {"format": "PARQUET", "path": str(tmp_path / "sink")}
+    r = Pipeline(spark, spec, LocalFSStateStore()).run()
+    assert r.files_written == 2
+    staged = spark.read.parquet(str(tmp_path / "staging/t1/transformed"))
+    sunk = spark.read.parquet(str(tmp_path / "sink"))
+    assert sunk.count() == staged.count()
+
+
 def test_pipeline_on_uri_paths_with_hadoop_state(spark, tmp_path):
     """All three phases over scheme-qualified URIs with the
     HadoopFSStateStore — the exact code path an object-store deployment

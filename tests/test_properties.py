@@ -570,12 +570,12 @@ def test_live_tokens_is_suffix_from_last_compaction(batches, compactions):
     invariant read_state/compact/vacuum all rest on."""
     from oracle_cassandra_migrator_spark.streaming.neardedup import (
         _live_tokens)
-    from oracle_cassandra_migrator_spark.streaming.partitioned import (
-        _token_key)
+    from oracle_cassandra_migrator_spark.streaming.fingerprint import (
+        token_key)
 
     tokens = sorted(
         [str(b) for b in batches]
-        + [f"{b}c{k}" for b, k in compactions], key=_token_key)
+        + [f"{b}c{k}" for b, k in compactions], key=token_key)
     live = _live_tokens(_FakeStore(tokens), "m")
     comp_idx = [i for i, t in enumerate(tokens) if "c" in t]
     want = tokens if not comp_idx else tokens[comp_idx[-1]:]
